@@ -74,6 +74,11 @@ def snapshot(
 def swap(spark: SparkSession, name: str, token: str, keep_old: bool = True) -> None:
     """Online swap: versioned table takes over the logical name.
 
+    The package's one rename protocol: ``pipeline.resize_and_rebalance``
+    writes and verifies ``{name}__v{token}`` and then calls this, so the
+    pipeline and a hand-run ``snapshot`` → ``swap`` → ``drop_versions``
+    share the same window and the same ``recover_swap`` repair.
+
     Ordering mirrors the reference's phases 4-5 (sharding_recreation.py:
     321-330): rename old aside, then rename new into place, each guarded
     by an EXISTS probe. NON-ATOMIC: between the two renames a reader of

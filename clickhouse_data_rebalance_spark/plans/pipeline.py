@@ -10,28 +10,29 @@ readers keep the logical table name throughout.
 Spark collapses the phases that exist only because ClickHouse separates
 local/distributed tables and per-node DDL (ON CLUSTER fan-out, recreate-
 originals-on-new-shards): the catalog is cluster-global and a table's
-partitioning IS its shard layout. What remains semantically is:
+partitioning IS its shard layout. What remains is the reference's
+phases 3 → 7 → 4/5 → 8:
 
-    rename aside → create empty target → hash re-scatter append → verify
-    → GC
+    create empty versioned table → hash re-scatter into it → verify
+    → swap (`catalog.swap`, the package's one rename protocol) → GC
 
-with the same guarded, idempotent ordering the reference uses
-(EXISTS probes before renames, sharding_recreation.py:216-217, 236-237;
-IF NOT EXISTS creates, :72-96).
+so the logical name serves the source until the new data is written and
+verified, with the reference's guarded ordering (EXISTS probes before
+renames, sharding_recreation.py:216-217, 236-237).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import Observation, SparkSession, functions as F
 
 from . import catalog as cat
 from .rebalance import rebalance
 
 
 def _strip_scheme(path: str) -> str:
-    """``file:/tmp/x`` / ``hdfs://nn/x`` → path part, for same-dir checks."""
+    """``file:/tmp/x`` / ``hdfs://nn/x`` → path part, for overlap checks."""
     import re
 
     return re.sub(r"^[a-z][a-z0-9+.-]*:(//[^/]*)?", "", path).rstrip("/")
@@ -68,7 +69,7 @@ class RebalanceReport:
     keys: list[str]
     rows_before: int
     rows_after: int
-    old_table: str | None  # name of the kept __old table, None if dropped
+    old_table: str | None  # name of the kept __old table, None if none kept
 
     @property
     def content_preserved(self) -> bool:
@@ -86,20 +87,28 @@ def resize_and_rebalance(
     """Re-scatter a catalog table across ``n_shards`` by ``keys`` while
     keeping its logical name readable — the whole reference pipeline.
 
-    Phase map (reference → here):
+    Phase map (reference → here, in the order it runs):
       1-2  DDL introspection/rewrite  → schema taken from the catalog
-      3    create versioned locals    → create empty target table (IF NOT
-                                        EXISTS semantics via exists-probe)
-      4    rename old aside           → ALTER ... RENAME TO {t}__old
-      5    rename new into place      → ALTER ... RENAME TO {t}
+      3    create versioned locals    → create empty ``{t}__vn{n_shards}``
+                                        at ``{location}/{t}``
       6    versioned dist router      → not needed: the DataFrame scan of
-                                        the __old table IS the fan-in read
+                                        the source IS the fan-in read
       7    INSERT INTO ... SELECT *   → rebalance(): one hash shuffle,
-                                        append into the new table
-      8    DROP old                   → drop_versions() unless keep_old
+                                        append into the versioned table
+      —    verify                     → its row count == the fan-in's
+      4-5  rename old aside, new in   → catalog.swap(), only once verified
+      8    DROP old                   → swap drops ``{t}__old``, then its
+                                        files are deleted (unless keep_old)
 
-    The non-atomic window between phases 4 and 5 exists in the reference
-    too (two separate cluster DDLs); both renames are metadata-only.
+    Readers of ``t`` see the source until the swap's two metadata renames
+    (the reference has the same window: two separate cluster DDLs).
+    ``keep_old=True`` keeps ``{t}__old``, both the table and its files. A
+    count mismatch never reaches the swap: ``t`` keeps the source, the
+    report says ``content_preserved`` False, and the versioned table stays
+    for inspection. A killed run leaves a stale versioned table (the next
+    run to the same shard count drops it), the swap's two-rename window
+    (``catalog.recover_swap``) or ``{t}__old`` (the next run refuses until
+    it is GC'd).
     """
     if not cat.table_exists(spark, table_name):
         raise ValueError(f"no such table: {table_name}")
@@ -119,63 +128,52 @@ def resize_and_rebalance(
         .head()["data_type"]
         .rstrip("/")
     )
-    if _strip_scheme(src_loc) == _strip_scheme(target_loc):
+    src_dir, tgt_dir = _strip_scheme(src_loc) + "/", _strip_scheme(target_loc) + "/"
+    if src_dir.startswith(tgt_dir) or tgt_dir.startswith(src_dir):
         raise ValueError(
-            f"target location {target_loc} is the CURRENT data location of "
-            f"{table_name} — pass a different `location` (the pipeline must "
-            "not clear the directory it is about to fan-in from)"
+            f"target location {target_loc} overlaps {table_name}'s data at "
+            f"{src_loc}: the pipeline clears the target before reading the "
+            "source and deletes the source after the swap"
         )
-    # phase 4: old aside (guarded — tableExists probe is the A11 analog)
-    spark.sql(f"ALTER TABLE {table_name} RENAME TO {oname}")
-    try:
-        # Guard before CREATE: an external-table CREATE ... LOCATION
-        # silently adopts any files already under the location (e.g. from
-        # a partially-failed earlier run), which would serve duplicate
-        # rows under the logical name after the INSERT — clear it first.
-        _delete_path(spark, target_loc)
-        _ensure_dir(spark, target_loc)
-        # phases 3+5 fused: create the empty target directly under the
-        # logical name (no intermediate versioned name needed — Spark has
-        # no per-shard DDL to stage)
-        spark.sql(
-            f"""CREATE TABLE IF NOT EXISTS {table_name} ({schema_ddl})
-                USING parquet LOCATION '{target_loc}'"""
-        )
-        # phase 7: THE rebalance — fan-in scan of old, one hash shuffle,
-        # fan-out append (sharding_recreation.py:159-160's INSERT-SELECT).
-        # rows_before rides the fan-in scan as an Observation instead of
-        # a separate count(): at 100 TB a dedicated pre-scan is a whole
-        # extra pass over the table purely for the invariant report
-        # (profiled at tools/profile_r07.md — VERDICT r6 #3)
-        from pyspark.sql import Observation
 
+    token = f"n{n_shards}"
+    vname = cat.versioned_name(table_name, token)
+    # a stale versioned table is what a run killed before its swap leaves
+    cat.drop_versions(spark, table_name, [token])
+    # Guard before CREATE: an external-table CREATE ... LOCATION silently
+    # adopts any files already under the location (e.g. from a killed
+    # earlier run), which would serve duplicate rows after the INSERT.
+    _delete_path(spark, target_loc)
+    _ensure_dir(spark, target_loc)
+    spark.sql(
+        f"CREATE TABLE {vname} ({schema_ddl}) USING parquet LOCATION '{target_loc}'"
+    )
+    try:
+        # phase 7: fan-in scan, one hash shuffle, fan-out append
+        # (sharding_recreation.py:159-160's INSERT-SELECT). rows_before
+        # rides the scan as an Observation: no extra pass over the source
         obs = Observation("rebalance_fanin")
-        fan_in = spark.table(oname).observe(
-            obs, F.count(F.lit(1)).alias("n_rows")
-        )
-        rebalance(fan_in, n_shards, keys).write.insertInto(table_name)
+        fan_in = src.observe(obs, F.count(F.lit(1)).alias("n_rows"))
+        rebalance(fan_in, n_shards, keys).write.insertInto(vname)
         rows_before = int(obs.get["n_rows"])
     except Exception:
-        # roll the rename back so the logical name still serves the data,
-        # and clean the half-written target location so a retry (or a
-        # later CREATE at the same location) cannot adopt partial files
-        if cat.table_exists(spark, table_name):
-            spark.sql(f"DROP TABLE {table_name}")
+        # the source was never touched: drop the half-written version so
+        # a retry (or a later CREATE at the same location) starts clean
+        spark.sql(f"DROP TABLE {vname}")
         _delete_path(spark, target_loc)
-        spark.sql(f"ALTER TABLE {oname} RENAME TO {table_name}")
         raise
 
-    rows_after = spark.table(table_name).count()
-    old_kept: str | None = oname
-    if not keep_old and rows_after == rows_before:
-        # phase 8: GC — only after the invariant holds
-        cat.drop_versions(spark, table_name)
-        old_kept = None
+    rows_after = spark.table(vname).count()
+    swapped = rows_after == rows_before
+    if swapped:
+        cat.swap(spark, table_name, token, keep_old=keep_old)
+        if not keep_old:
+            _delete_path(spark, src_loc)
     return RebalanceReport(
         table=table_name,
         n_shards=n_shards,
         keys=keys,
         rows_before=rows_before,
         rows_after=rows_after,
-        old_table=old_kept,
+        old_table=oname if swapped and keep_old else None,
     )

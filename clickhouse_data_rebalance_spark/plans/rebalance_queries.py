@@ -147,8 +147,9 @@ _PIPELINE_ORACLE = f"""
 @query("rebalance_pipeline", _PIPELINE_ORACLE)
 def rebalance_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full 8-phase flow (sharding_recreation.py:306-335)
-    as one call: rename-aside → create → hash re-scatter → verify → GC.
-    Invariants of the landed table must match the source exactly."""
+    as one call: create versioned table → hash re-scatter → verify →
+    catalog.swap → GC. Invariants of the landed table must match the
+    source exactly."""
     from .pipeline import resize_and_rebalance
 
     table(spark, sf_dir, "orders")

@@ -17,6 +17,7 @@ from clickhouse_data_rebalance_spark.plans.rebalance import (
 )
 
 from .conftest import SF_SMALL
+from .test_rebalance_scale import _fingerprint
 
 
 @pytest.fixture(scope="module")
@@ -213,6 +214,7 @@ def test_pipeline_end_to_end(spark, tmp_path):
     assert rep.content_preserved and rep.rows_after == 1000
     assert rep.old_table is None  # GC'd after the invariant held
     assert spark.table("pipe_t").agg(F.sum("v")).collect()[0][0] == 999 * 1000
+    assert not (tmp_path / "seed").exists()  # the old copy's files went too
     spark.sql("DROP TABLE IF EXISTS pipe_t")
 
 
@@ -227,6 +229,7 @@ def test_pipeline_keep_old(spark, tmp_path):
     assert rep.old_table == "pipe_k__old"
     assert cat.table_exists(spark, "pipe_k__old")
     assert spark.table("pipe_k__old").count() == 50
+    assert (tmp_path / "seed2").is_dir()  # keep_old keeps the files too
     for t in ["pipe_k", "pipe_k__old"]:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -237,3 +240,115 @@ def test_pipeline_missing_table_raises(spark):
 
     with _pytest.raises(ValueError):
         resize_and_rebalance(spark, "no_such_tbl", 4, ["x"], location="/tmp/x")
+
+
+def _seed_table(spark, tmp_path, name, n=300):
+    """Drop ``name`` and its side-tables, then write a fresh external table
+    of ``n`` rows (key ``k``, value ``v``) and return its fingerprint."""
+    for t in cat.list_tables(spark):
+        if t == name or t.startswith(f"{name}__"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.range(n).select((F.col("id") % 17).alias("k"), F.col("id").alias("v")).write.option(
+        "path", str(tmp_path / f"{name}_seed")
+    ).saveAsTable(name)
+    return _fingerprint(spark.table(name))
+
+
+def _spy_rebalance(monkeypatch, spark, table, transform=lambda df: df):
+    """Wrap ``pipeline.rebalance``: each call records the row count a
+    reader of ``table`` sees at that moment, then delegates on
+    ``transform(df)``. Returns the list of recorded counts."""
+    from clickhouse_data_rebalance_spark.plans import pipeline
+
+    seen, real = [], pipeline.rebalance
+
+    def spy(df, *args, **kwargs):
+        seen.append(spark.table(table).count())
+        return real(transform(df), *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "rebalance", spy)
+    return seen
+
+
+def _side_tables(spark, name):
+    return [t for t in cat.list_tables(spark) if t.startswith(f"{name}__")]
+
+
+def test_pipeline_source_readable_during_write(spark, tmp_path, monkeypatch):
+    """The logical name serves the source while the re-scatter runs: only
+    the swap after a verified write touches it."""
+    from clickhouse_data_rebalance_spark.plans.pipeline import resize_and_rebalance
+
+    _seed_table(spark, tmp_path, "pipe_r")
+    seen = _spy_rebalance(monkeypatch, spark, "pipe_r")
+    rep = resize_and_rebalance(spark, "pipe_r", 3, ["k"], location=str(tmp_path))
+    assert seen == [300]
+    assert rep.content_preserved and spark.table("pipe_r").count() == 300
+    assert _side_tables(spark, "pipe_r") == []
+    spark.sql("DROP TABLE IF EXISTS pipe_r")
+
+
+def test_pipeline_failure_leaves_source(spark, tmp_path, monkeypatch):
+    """A run that raises before the swap (unknown key column) leaves the
+    source serving throughout, no side-table and no data files."""
+    from clickhouse_data_rebalance_spark.plans.pipeline import resize_and_rebalance
+
+    before = _seed_table(spark, tmp_path, "pipe_f")
+    seen = _spy_rebalance(monkeypatch, spark, "pipe_f")
+    with pytest.raises(Exception):
+        resize_and_rebalance(spark, "pipe_f", 4, ["no_such_col"], location=str(tmp_path))
+    assert seen == [300]
+    assert _fingerprint(spark.table("pipe_f")) == before
+    assert _side_tables(spark, "pipe_f") == []
+    assert not list((tmp_path / "pipe_f").rglob("*.parquet"))
+    spark.sql("DROP TABLE IF EXISTS pipe_f")
+
+
+def test_pipeline_rerun_drops_stale_version(spark, tmp_path):
+    """A run killed after writing its versioned table but before the swap
+    leaves ``{t}__v{token}`` with data at the target; the next run drops
+    it and lands exactly the source's content."""
+    from clickhouse_data_rebalance_spark.plans.pipeline import resize_and_rebalance
+
+    before = _seed_table(spark, tmp_path, "pipe_s")
+    spark.range(7).select(F.col("id").alias("k"), F.col("id").alias("v")).write.option(
+        "path", str(tmp_path / "pipe_s")
+    ).saveAsTable(cat.versioned_name("pipe_s", "n4"))
+    rep = resize_and_rebalance(spark, "pipe_s", 4, ["k"], location=str(tmp_path))
+    assert rep.content_preserved and rep.rows_after == 300
+    assert _fingerprint(spark.table("pipe_s")) == before
+    assert _side_tables(spark, "pipe_s") == []
+    spark.sql("DROP TABLE IF EXISTS pipe_s")
+
+
+def test_pipeline_count_mismatch_never_swaps(spark, tmp_path, monkeypatch):
+    """If the written version's count differs from the fan-in's, the swap
+    never runs: the logical name keeps the source and the report says so."""
+    from clickhouse_data_rebalance_spark.plans.pipeline import resize_and_rebalance
+
+    before = _seed_table(spark, tmp_path, "pipe_m")
+    _spy_rebalance(monkeypatch, spark, "pipe_m", lambda df: df.filter(F.col("v") % 2 == 0))
+    rep = resize_and_rebalance(spark, "pipe_m", 2, ["k"], location=str(tmp_path))
+    assert (rep.rows_before, rep.rows_after) == (300, 150)
+    assert not rep.content_preserved and rep.old_table is None
+    assert _fingerprint(spark.table("pipe_m")) == before
+    assert (tmp_path / "pipe_m_seed").is_dir()
+    for t in ["pipe_m", *_side_tables(spark, "pipe_m")]:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+@pytest.mark.parametrize("seed_dir, location", [
+    ("pipe_o", "."),  # target is the source's own directory
+    ("src", "src"),  # target nested in the source: deleting the source would take it
+    ("pipe_o/seed", "."),  # source nested in the target: clearing the target would take it
+])
+def test_pipeline_refuses_overlapping_location(spark, tmp_path, seed_dir, location):
+    from clickhouse_data_rebalance_spark.plans.pipeline import resize_and_rebalance
+
+    spark.sql("DROP TABLE IF EXISTS pipe_o")
+    spark.range(20).write.option("path", str(tmp_path / seed_dir)).saveAsTable("pipe_o")
+    with pytest.raises(ValueError, match="overlaps"):
+        resize_and_rebalance(spark, "pipe_o", 2, ["id"], location=str(tmp_path / location))
+    assert spark.table("pipe_o").count() == 20
+    assert _side_tables(spark, "pipe_o") == []
+    spark.sql("DROP TABLE IF EXISTS pipe_o")

@@ -1,5 +1,5 @@
 """Empirical validation of the reference's CORE path — the
-rename-aside / create / INSERT-SELECT re-shard / verify / GC pipeline
+versioned create / INSERT-SELECT re-shard / verify / swap / GC pipeline
 (`resize_and_rebalance`, sharding_recreation.py:159-160's INSERT-SELECT
 re-expressed as one hash shuffle) — at 10M rows, three orders of
 magnitude past the fixture's sf0.01 scan.
