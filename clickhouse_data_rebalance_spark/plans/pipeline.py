@@ -122,12 +122,13 @@ def resize_and_rebalance(
     )
 
     target_loc = f"{location.rstrip('/')}/{table_name}"
-    src_loc = (
-        spark.sql(f"DESCRIBE FORMATTED {table_name}")
-        .filter("col_name = 'Location'")
-        .head()["data_type"]
-        .rstrip("/")
-    )
+    # collect() of a command's result reads its local rows and starts no
+    # Spark job; a .filter().head() on it plans a query and starts jobs
+    src_loc = next(
+        r["data_type"]
+        for r in spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
+        if r["col_name"] == "Location"
+    ).rstrip("/")
     src_dir, tgt_dir = _strip_scheme(src_loc) + "/", _strip_scheme(target_loc) + "/"
     if src_dir.startswith(tgt_dir) or tgt_dir.startswith(src_dir):
         raise ValueError(

@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
+import bench
 from clickhouse_data_rebalance_spark import registry
 
 from .conftest import SF_SMALL
@@ -322,6 +324,8 @@ def test_repetition_filter_is_shuffle_free(spark):
     exchange — no hash-partition exchange anywhere."""
     plan = plan_of(spark, "ngram_repetition_quality")
     assert "hashpartitioning" not in plan.lower()
+    # the 5-grams are built in the JVM: no row goes to a Python worker
+    assert "EvalPython" not in plan
 
 
 def test_quantization_is_shuffle_free(spark):
@@ -1521,3 +1525,34 @@ def test_corpus_upstream_filter_pushes_through_barrier_project(spark):
     assert pushed and any(
         "lang" in ln and "EqualTo" in ln for ln in pushed
     ), plan
+
+
+# Python exec nodes each CORE plan may hold, with multiplicity; a query
+# not listed holds none. A new Python boundary in a CORE plan fails
+# test_core_python_boundaries until it is added here on purpose.
+PYTHON_EXEC_NODES = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "AggregateInPandas",
+    "WindowInPandas",
+)
+CORE_PYTHON_BOUNDARIES: dict[str, tuple[str, ...]] = {
+    # SimHash signature bit sums (llm_dedup._simhash_from_hashes)
+    "dedup_simhash": ("ArrowEvalPython", "ArrowEvalPython"),
+    # numpy hyperplane bucket coder (llm_similarity bucket_codes)
+    "ann_lsh_topk": ("ArrowEvalPython", "ArrowEvalPython"),
+    # 5-grams built by the JVM NGram transformer
+    "ngram_repetition_quality": (),
+}
+
+
+@pytest.mark.parametrize("name", bench.CORE)
+def test_core_python_boundaries(spark, name):
+    plan = plan_of(spark, name)
+    # the formatted plan's detail section lists every operator, subquery
+    # operators included, once as "(id) Name"
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M)
+    got = tuple(sorted(n for n in nodes if n in PYTHON_EXEC_NODES))
+    assert got == CORE_PYTHON_BOUNDARIES.get(name, ()), plan

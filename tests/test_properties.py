@@ -12,6 +12,7 @@ from __future__ import annotations
 import hashlib
 import os
 import re
+from unittest.mock import patch
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -60,6 +61,52 @@ def test_token_count_matches_split(spark, texts):
     got = [r["n"] for r in df.select(F.size(tokens("text")).alias("n")).collect()]
     want = [len(t.strip().split()) if t.strip() else 1 for t in texts]
     # split of all-whitespace yields [""] (size 1) in both engines' semantics
+    assert got == want
+
+
+# tokens include "" so joins produce doubled, leading and trailing spaces;
+# the two-letter alphabet makes repeated 5-grams common
+GRAM_TEXTS = st.lists(
+    st.lists(st.sampled_from(["", "a", "b"]), min_size=0, max_size=14).map(" ".join)
+    | st.none(),
+    min_size=1,
+    max_size=20,
+)
+# always in the batch: exactly 4 and 5 tokens, doubled/leading/trailing
+# spaces, a repeated gram, NULL and the empty string
+GRAM_FIXED = [
+    "a b c d",
+    "a b c d e",
+    " a  b c d",
+    "a b c d ",
+    "a a a a a a a",
+    "x y z w v x y z w v",
+    None,
+    "",
+]
+
+
+def _py_gram5_counts(text: str) -> tuple[int, int]:
+    w = text.split(" ")
+    return len(w) - 4, len(set(zip(w, w[1:], w[2:], w[3:], w[4:])))
+
+
+@settings(**_SETTINGS)
+@given(GRAM_TEXTS)
+def test_ngram_repetition_counts_match_python_model(spark, texts):
+    from clickhouse_data_rebalance_spark.operators import llm_text
+
+    texts = GRAM_FIXED + texts
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id BIGINT, text STRING")
+    with patch.object(llm_text, "table", lambda *_: docs):
+        rows = llm_text.ngram_repetition_quality(spark, "").collect()
+    got = {r["doc_id"]: (r["n_ngrams"], r["n_distinct_ngrams"]) for r in rows}
+    # the size filter drops NULL texts and texts of fewer than 5 tokens
+    want = {
+        i: _py_gram5_counts(t)
+        for i, t in enumerate(texts)
+        if t is not None and len(t.split(" ")) >= 5
+    }
     assert got == want
 
 
